@@ -24,9 +24,13 @@ shuffle on the node key, no driver data. The driver coordinates only
 the loop and reads ONE scalar per round (changed-label count / edge-set
 fingerprint) — the standard iterative-algorithm contract (same as
 GraphFrames/MLlib), not a collect of data. Hygiene per round: the
-superseded cached state is unpersisted as soon as its successor is
-materialized, and lineage is cut with an EAGER ``localCheckpoint``
-every round. The checkpoint is almost free — the per-round scalar read
+superseded state is dropped as soon as its successor is materialized,
+and lineage is cut with an EAGER ``localCheckpoint`` every round.
+``unpersist()`` on a checkpointed frame does NOT free its blocks (the
+SQL cache has no entry for an RDD-backed plan); Spark's ContextCleaner
+frees them once the frame is unreferenced and the driver JVM collects
+it, so dropping the last reference is what releases them. The
+checkpoint is almost free — the per-round scalar read
 already materializes every partition, so the only marginal cost is the
 local storage write — and without it each round's logical plan nests
 the previous round's plus the (potentially enormous) pair-producer
@@ -393,7 +397,7 @@ def kcore_peel(
     per-round shuffle budget as PageRank, with the edge frame SHRINKING
     monotonically. State hygiene matches the other fixed-point loops:
     eager localCheckpoint per round cuts lineage, superseded frames are
-    unpersisted immediately."""
+    dereferenced immediately."""
     with _loop_shuffle_partitions(edges):
         cur = (
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -401,7 +405,6 @@ def kcore_peel(
             .localCheckpoint(eager=True)
         )
         out = None
-        prev_ann = None
         for r in range(1, rounds + 1):
             # One materialized pass per round: posexplode the two
             # endpoints, count the node's degree with a window (counts
@@ -456,19 +459,15 @@ def kcore_peel(
             )
             out = census if out is None else out.unionByName(census)
             # Pin the census rows accumulated so far (≤ r tiny rows) so
-            # nothing downstream references superseded `ann` frames,
-            # then drop the PREVIOUS round's O(edges) checkpoint — the
-            # current `ann` is still `cur`'s source for the next round.
-            # (r15 ADVICE: holding every round's ann for the whole loop
-            # grows peak block-manager storage to the SUM of all
-            # rounds' surviving edge sets; with the per-round census
-            # checkpoint the high-water mark is two rounds' edges.)
+            # nothing downstream references superseded `ann` frames;
+            # rebinding `ann` and `cur` next round then drops the last
+            # reference to this round's O(edges) checkpoint. Its blocks
+            # are freed by the ContextCleaner after the driver JVM's
+            # next GC (unpersist() would not free them: the SQL cache
+            # has no entry for a checkpointed plan), so the high-water
+            # mark is two rounds' edges plus what GC has not yet
+            # reclaimed, not the SUM over all rounds (r15 ADVICE).
             out = out.localCheckpoint(eager=True)
-            if r == 1:
-                cur.unpersist()
-            if prev_ann is not None:
-                prev_ann.unpersist()
-            prev_ann = ann
             cur = nxt
         assert out is not None
         return out.orderBy("round")

@@ -210,13 +210,15 @@ _NONDET_PLAN_MARKERS = (
     "localtablescan",
     # r15 ADVICE: plans whose toString does not pin their ROWS even
     # though inputFiles() is non-empty — an RDD-backed leaf (e.g. a
-    # localCheckpoint'd frame joined to a file scan) or a cached
-    # relation can hold different data under a structurally identical
-    # plan, and monotonically_increasing_id() is partitioning-dependent
+    # localCheckpoint'd frame joined to a file scan) can hold different
+    # data under a structurally identical plan, and
+    # monotonically_increasing_id() is partitioning-dependent. A cached
+    # relation needs no marker: the analyzed plan still shows the
+    # cached frame's own plan (InMemoryRelation is substituted after
+    # analysis), and these markers screen that plan like any other.
     "logicalrdd",
     "existingrdd",
     "scanexistingrdd",
-    "inmemoryrelation",
     "monotonically_increasing_id",
 )
 
@@ -543,7 +545,11 @@ class TableLog:
                     dst = self.data_dir / f"{tag}-{token}-{i:05d}.parquet"
                     _link_or_copy(p, dst)
                     out.append(str(dst))
-                return out
+                if out:
+                    return out
+                # glob() of a dir that vanished after the is_dir()
+                # check yields nothing rather than raising: a miss too
+                raise FileNotFoundError(staged)
             except OSError:
                 # r15 ADVICE (TOCTOU): the staged dir vanished between
                 # the is_dir() check and the relink (tmp cleaner). Evict

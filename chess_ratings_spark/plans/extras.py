@@ -746,10 +746,7 @@ def sink_pyds_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_manifest,
     )
 
-    try:
-        spark.dataSource.register(JsonlManifestSink)
-    except Exception:
-        pass  # already registered in this session
+    tables.register_data_source(spark, JsonlManifestSink)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),

@@ -1929,10 +1929,7 @@ def src_tablelog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chess_ratings_spark.operators.tablelog import TableLog
     from chess_ratings_spark.sources.tablelog_batch import TableLogBatchSource
 
-    try:
-        spark.dataSource.register(TableLogBatchSource)
-    except Exception:
-        pass
+    tables.register_data_source(spark, TableLogBatchSource)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
@@ -2056,10 +2053,7 @@ def scan_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         TableLogPushdownReader,
     )
 
-    try:
-        spark.dataSource.register(TableLogBatchSource)
-    except Exception:
-        pass
+    tables.register_data_source(spark, TableLogBatchSource)
     # Spark 4.1 gates Python-source pushdown behind a flag (planning
     # calls into Python); runtime-settable SQL conf
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

@@ -590,10 +590,7 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chess_ratings_spark.operators.tablelog import TableLog
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
-    try:
-        spark.dataSource.register(TableLogCdfSource)
-    except Exception:
-        pass
+    tables.register_data_source(spark, TableLogCdfSource)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
@@ -715,10 +712,7 @@ def stream_replicate_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chess_ratings_spark.operators.tablelog import TableLog
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
-    try:
-        spark.dataSource.register(TableLogCdfSource)
-    except Exception:
-        pass
+    tables.register_data_source(spark, TableLogCdfSource)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),
@@ -895,10 +889,7 @@ def stream_ivm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chess_ratings_spark.operators.tablelog import TableLog
     from chess_ratings_spark.sources.tablelog_stream import TableLogCdfSource
 
-    try:
-        spark.dataSource.register(TableLogCdfSource)
-    except Exception:
-        pass
+    tables.register_data_source(spark, TableLogCdfSource)
     ev = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("vc"),

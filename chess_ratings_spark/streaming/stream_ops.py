@@ -1895,15 +1895,13 @@ def pyds_stream_sink_census(spark: SparkSession, ev: DataFrame) -> DataFrame:
     import tempfile
     from pathlib import Path
 
+    from chess_ratings_spark import tables as _tables
     from chess_ratings_spark.sources.jsonl_sink import (
         JsonlManifestSink,
         read_epoch_manifests,
     )
 
-    try:
-        spark.dataSource.register(JsonlManifestSink)
-    except Exception:
-        pass  # already registered in this session
+    _tables.register_data_source(spark, JsonlManifestSink)
     root = tempfile.mkdtemp(prefix="crs_pydsw_")
     indir = root + "/in"
     ckpt = root + "/ckpt"

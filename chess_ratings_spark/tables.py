@@ -46,7 +46,11 @@ def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-_SHIPPED_SESSIONS: set[int] = set()
+#: application ids of the SparkContexts the package was shipped to.
+#: Shipping is per context (``addPyFile`` and the pyFiles list live on
+#: the SparkContext), and an application id, unlike ``id(spark)``, is
+#: never reused by a later context of the same process.
+_SHIPPED_APPS: set[str] = set()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -56,22 +60,58 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     sys.path at runtime — a path the spawned Python workers do NOT
     inherit, so any UDF whose closure references a module-level symbol
     dies with ModuleNotFoundError. Shipping the package once per
-    session via addPyFile fixes every current and future UDF at the
-    root. (On a real cluster this is --py-files/pip-installed envs;
+    SparkContext via addPyFile fixes every current and future UDF at
+    the root. (On a real cluster this is --py-files/pip-installed envs;
     addPyFile is the runtime equivalent.)
+
+    Two readers need more than ``addPyFile``:
+
+    - Executors fetch the zip from the path given to ``addPyFile``
+      (local mode: on their next task; a cluster: through the driver's
+      file server, for as long as the application runs). The temp dir
+      holding it is therefore removed at interpreter exit, not before.
+    - Spark's streaming-source runner (``PythonStreamingSourceRunner``,
+      which plans Python ``DataSourceStreamReader`` sources on the
+      driver) looks the pyFiles up under
+      ``<SparkFiles root>/streaming_job``, a directory ``addPyFile``
+      never fills, so the driver's SparkFiles copy of the zip is copied
+      there as well.
     """
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
+    sc = spark.sparkContext
+    key = sc.applicationId
+    if key in _SHIPPED_APPS:
         return
+    import atexit
     import shutil
     import tempfile
     from pathlib import Path
 
+    from pyspark import SparkFiles
+
     pkg_dir = Path(__file__).resolve().parent
-    zip_base = Path(tempfile.mkdtemp(prefix="crs_pkg_")) / "chess_ratings_spark_pkg"
-    archive = shutil.make_archive(str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name)
-    spark.sparkContext.addPyFile(archive)
-    _SHIPPED_SESSIONS.add(key)
+    tmp = tempfile.mkdtemp(prefix="crs_pkg_")
+    atexit.register(shutil.rmtree, tmp, True)
+    archive = Path(shutil.make_archive(
+        str(Path(tmp) / "chess_ratings_spark_pkg"), "zip",
+        root_dir=pkg_dir.parent, base_dir=pkg_dir.name,
+    ))
+    sc.addPyFile(str(archive))
+    root = Path(SparkFiles.getRootDirectory())
+    (root / "streaming_job").mkdir(exist_ok=True)
+    shutil.copyfile(root / archive.name, root / "streaming_job" / archive.name)
+    _SHIPPED_APPS.add(key)
+
+
+def register_data_source(spark: SparkSession, source_cls: type) -> None:
+    """Register a Python data source after shipping the package.
+
+    Registration pickles the class together with the context's pyFiles
+    list as it is at that moment; a source registered before the
+    package is shipped plans in workers that cannot import it.
+    Registering again replaces the earlier entry.
+    """
+    ensure_package_shipped(spark)
+    spark.dataSource.register(source_cls)
 
 
 #: analyzed-frame memo per (session, sf dir, table): every

@@ -9,6 +9,10 @@ Timing methodology matches bench.py exactly (same session builder, same
 noop sink, same warmups are NOT run — use for relative A/B on a settled
 machine, not for publishing totals). Explains are written to
 plans/r15/<query>_<suffix>.txt when --explain-dir is given.
+
+Each run's Janino compile count (Spark's CodegenMetrics) is printed
+next to its time: a warm run that still compiles means its generated
+classes were evicted from the codegen cache since the previous run.
 """
 
 from __future__ import annotations
@@ -50,6 +54,7 @@ def main() -> None:
 
     spark = get_spark("crs-opt-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for t in tables.TABLES:
         try:
             tables.load(spark, args.sf_dir, t).count()
@@ -59,22 +64,29 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         q = REGISTRY[name]
-        times = []
+        times, compiled = [], []
         plan_txt = None
         for r in range(args.runs):
             spark.sparkContext.setJobDescription(f"opt_probe:{name}#{r}")
+            c0 = compiles.getCount()
             t0 = time.perf_counter()
             df = q.fn(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
+            compiled.append(compiles.getCount() - c0)
             if plan_txt is None and args.explain_dir:
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     df.explain("formatted")
                 plan_txt = buf.getvalue()
         spark.sparkContext.setJobDescription(None)
-        out[name] = {"times": times, "min": min(times), "median": sorted(times)[len(times) // 2]}
-        print(f"{name}: min={min(times):.3f} runs={times}", flush=True)
+        out[name] = {
+            "times": times,
+            "compiles": compiled,
+            "min": min(times),
+            "median": sorted(times)[len(times) // 2],
+        }
+        print(f"{name}: min={min(times):.3f} runs={times} compiles={compiled}", flush=True)
         if plan_txt and args.explain_dir:
             d = Path(args.explain_dir)
             d.mkdir(parents=True, exist_ok=True)

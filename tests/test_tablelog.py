@@ -2405,3 +2405,42 @@ def test_land_stage_links_fixture_slices(base, spark):
         os.unlink(p)
     still = sorted(r.k for r in b.snapshot(spark).filter("m = 0").collect())
     assert still == want
+
+
+def test_land_relink_of_vanished_stage_writes_fresh(base, spark, monkeypatch):
+    """A staged slice dir that vanishes between the ``is_dir()`` check
+    and the relink ``glob()`` (tmp cleaner) is a cache miss: the landing
+    falls through to a fresh Spark write instead of committing zero
+    files, and the stale stage key is evicted."""
+    import pathlib
+
+    from chess_ratings_spark.operators import tablelog as tl
+
+    if not tl._USE_LAND_STAGING:
+        pytest.skip("land staging disabled")
+    src_dir = base + "/fixture"
+    spark.range(60).selectExpr("id AS k", "id % 3 AS m").write.mode(
+        "overwrite"
+    ).parquet(src_dir)
+    sl = spark.read.parquet(src_dir).filter(F.col("m") == 2)
+    TableLog(base + "/a").append(sl, n_files=2, tag="s2")
+    key = tl._land_stage_key(sl, 2)
+    staged = tl._LAND_STAGE_CACHE[key]
+
+    is_dir = pathlib.Path.is_dir
+
+    def vanish_after_check(self):
+        # the first check of the staged dir sees it; it is gone by the
+        # time glob() looks (glob's own is_dir() then reports False)
+        if str(self) == staged and Path(staged).exists():
+            shutil.rmtree(staged)
+            return True
+        return is_dir(self)
+
+    monkeypatch.setattr(pathlib.Path, "is_dir", vanish_after_check)
+    b = TableLog(base + "/b")
+    b.append(sl, n_files=2, tag="s2")
+    monkeypatch.undo()
+
+    assert b.snapshot(spark).count() == 20
+    assert tl._LAND_STAGE_CACHE.get(key) != staged
