@@ -251,18 +251,18 @@ def main() -> None:
     except Exception as exc:
         print(f"# BENCH WARMUP ERROR streaming: {exc}", file=sys.stderr)
 
-    # Warm the stream-source staging cache: live-streaming queries
-    # replay the events fixture through a parquet stream source via
-    # stream_ops._stage(reuse=True) (one shared staged copy per
-    # session). Without this warmup the one-time ~2-3 s staging write
-    # lands on whichever stateful/live query happens to run FIRST and
-    # reads as a plan regression on that query (round 7's
-    # stream_stateful 2.3 -> 3.8 s was exactly this attribution
-    # drift; the plan itself re-measured 2.0 s warm).
+    # Warm the fixture staging: live-streaming queries replay the
+    # events fixture through a parquet stream source staged once per
+    # process (tables.staged_dir). Without this warmup the one-time
+    # ~2-3 s staging write lands on whichever stateful/live query
+    # happens to run FIRST and reads as a plan regression on that query
+    # (round 7's stream_stateful 2.3 -> 3.8 s was exactly this
+    # attribution drift; the plan itself re-measured 2.0 s warm).
     try:
         from chess_ratings_spark.streaming import stream_ops
 
-        stream_ops._stage(tables.load(spark, sf_dir, "events"), reuse=True)
+        ev = tables.load(spark, sf_dir, "events")
+        tables.staged_dir(ev.select(*stream_ops.EVENT_COLS))
     except Exception as exc:
         print(f"# BENCH WARMUP ERROR stage: {exc}", file=sys.stderr)
 

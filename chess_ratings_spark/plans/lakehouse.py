@@ -21,7 +21,7 @@ from chess_ratings_spark.registry import register
 #: queries (round-12 verdict #5). The bucketized scratch is computed
 #: once per session+sf and every query lands its own private COPIES
 #: into its own TableLog, so table mutations never touch the cache.
-#: Same lifetime/serial-driver assumptions as stream_ops._STAGE_CACHE.
+#: Same lifetime/serial-driver assumptions as tables.staged_dir.
 _MOR_FIXTURE_CACHE: dict[tuple[int, str], tuple[str, dict]] = {}
 
 

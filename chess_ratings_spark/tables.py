@@ -12,9 +12,19 @@ purpose: the fixture values are naive wall times and NTZ semantics are
 session-timezone-independent, which keeps every downstream extraction
 (year/window/bucket) deterministic no matter how the driver configured
 its session.
+
+The module also owns the one staging rule for fixture slices that
+harnesses land again and again (``staged_dir`` / ``land_staged``; see
+DESIGN.md, "Fixture staging").
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,11 +91,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     key = sc.applicationId
     if key in _SHIPPED_APPS:
         return
-    import atexit
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from pyspark import SparkFiles
 
     pkg_dir = Path(__file__).resolve().parent
@@ -134,6 +139,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             got = load_events(spark, sf_dir)
         else:
             got = spark.read.parquet(path_of(sf_dir, name))
+        _FIXTURE_FILES.update(_file_id(f) for f in got.inputFiles())
         _FRAME_CACHE[key] = got
     return got
 
@@ -282,3 +288,180 @@ def local_row(spark: SparkSession, *cols: tuple[str, object, str]) -> DataFrame:
     return spark.range(1).select(
         *[F.lit(v).cast(t).alias(n) for (n, v, t) in cols]
     )
+
+
+# -- fixture staging ----------------------------------------------------
+
+#: Every file a ``load`` call read (``_file_id``). Fixtures are
+#: immutable for the life of the process, so a frame that reads only
+#: these files has its rows fixed by its plan and the session confs.
+_FIXTURE_FILES: set[str] = set()
+
+#: Plan markers that keep a frame out of staging: nondeterministic
+#: expressions (staging would freeze one sample) and leaves whose plan
+#: string does not pin their rows (local relations, RDD-backed frames
+#: such as a localCheckpoint'd frame joined to a fixture scan).
+#: ``monotonically_increasing_id`` depends on the partitioning. A cached
+#: frame needs no marker: InMemoryRelation is substituted after
+#: analysis, so the analyzed plan shows the cached frame's own plan.
+_UNSTAGEABLE_MARKERS = (
+    "rand(",
+    "randn(",
+    "uuid()",
+    "current_timestamp",
+    "current_date",
+    "now()",
+    "shuffle(",
+    "localrelation",
+    "localtablescan",
+    "logicalrdd",
+    "existingrdd",
+    "scanexistingrdd",
+    "monotonically_increasing_id",
+)
+
+#: Session confs that change row content for one plan over one set of
+#: files (timestamp parsing and rendering, ANSI casts, datetime rebase).
+_CONTENT_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.ansi.enabled",
+    "spark.sql.parquet.datetimeRebaseModeInRead",
+    "spark.sql.parquet.int96RebaseModeInRead",
+)
+
+#: stage key -> staged parquet dir, shared by every landing of that key.
+_STAGED: dict[tuple, str] = {}
+
+#: Temp roots of every dir ``staged_dir`` wrote; removed at exit.
+_STAGE_ROOTS: list[str] = []
+
+
+def _file_id(uri: str) -> str:
+    """One spelling per file: ``file:`` URIs (``file:/p``,
+    ``file:///p``, percent-escaped) become the local path; any other
+    URI is kept as given."""
+    from urllib.parse import unquote, urlsplit
+
+    u = urlsplit(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
+
+
+def _stage_key(df: DataFrame, n_files: int | None) -> tuple | None:
+    """What a staged copy of ``df`` depends on: its analyzed plan with
+    expression IDs stripped (they are minted afresh each time a query
+    rebuilds the same slice), its schema, its input files, the content
+    confs and ``n_files``. None when ``df`` reads anything but fixture
+    files or its plan carries an unstageable marker."""
+    try:
+        files = tuple(sorted(_file_id(f) for f in df.inputFiles()))
+        if not files or not _FIXTURE_FILES.issuperset(files):
+            return None
+        plan = df._jdf.queryExecution().analyzed().toString()
+        if any(m in plan.lower() for m in _UNSTAGEABLE_MARKERS):
+            return None
+        import hashlib
+        import re
+
+        conf = df.sparkSession.conf
+        confs = "|".join(str(conf.get(k, None)) for k in _CONTENT_CONFS)
+        fp = hashlib.md5(
+            "\n".join(
+                (df.schema.simpleString(), re.sub(r"#\d+", "#", plan), confs)
+            ).encode()
+        ).hexdigest()
+        return (fp, files, n_files)
+    except Exception:
+        return None
+
+
+def _write(df: DataFrame, n_files: int | None, path: str) -> str:
+    (df if n_files is None else df.repartition(n_files)).write.parquet(path)
+    return path
+
+
+def _staged(df: DataFrame, n_files: int | None, key: tuple | None) -> str:
+    path = _STAGED.get(key) if key is not None else None
+    if path is not None and Path(path).is_dir():
+        return path
+    root = tempfile.mkdtemp(prefix="crs_stage_")
+    _STAGE_ROOTS.append(root)
+    path = _write(df, n_files, root + "/in")
+    if key is not None:
+        _STAGED[key] = path
+    return path
+
+
+def staged_dir(df: DataFrame, n_files: int | None = None) -> str:
+    """A parquet dir holding ``df``'s rows, as ``n_files`` files when
+    given. A fixture slice is written once per process and its dir is
+    returned to every later call with an equal key; any other frame
+    gets a fresh dir. The dir may be shared, so callers only read it.
+    Every dir is removed at interpreter exit."""
+    return _staged(df, n_files, _stage_key(df, n_files))
+
+
+def link_or_copy(src, dst) -> None:
+    """Land an immutable data file by HARDLINK when the filesystem
+    allows it, byte-copy otherwise. Parquet writers commit by rename and
+    never modify a file in place, so a link is semantically a copy at
+    the cost of one inode."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy(src, dst)
+
+
+def _relink(src: str, dest: Path, name) -> list[str]:
+    """Link ``src``'s parquet files into ``dest``; on an error the
+    files this call landed are unlinked before it propagates."""
+    out: list[str] = []
+    made: list[Path] = []
+    try:
+        for i, p in enumerate(sorted(Path(src).glob("*.parquet"))):
+            d = dest / name(i, p)
+            if not d.exists():  # the same slice landed here before
+                link_or_copy(p, d)
+                made.append(d)
+            out.append(str(d))
+    except OSError:
+        for d in made:
+            d.unlink(missing_ok=True)
+        raise
+    return out
+
+
+def land_staged(
+    df: DataFrame, dest: str | Path, n_files: int | None = None, name=None
+) -> list[str]:
+    """Land ``df``'s rows in ``dest`` by hardlinking (or copying) the
+    files of its staged dir; returns the landed paths. ``name(i, path)``
+    names the i-th file in ``dest`` (default: the staged file's own
+    name, which carries its write job's UUID, so a second slice lands
+    beside the first and a repeated one is skipped). A frame that is not
+    a fixture slice is written to a temp dir that is removed once
+    landed. A staged dir that vanished before or during the relink (tmp
+    cleaner) is a miss: the slice is written afresh."""
+    dest = Path(dest)
+    dest.mkdir(parents=True, exist_ok=True)
+    name = name or (lambda i, p: p.name)
+    key = _stage_key(df, n_files)
+    if key is None:
+        with tempfile.TemporaryDirectory(prefix="crs_stage_") as tmp:
+            return _relink(_write(df, n_files, tmp + "/in"), dest, name)
+    try:
+        out = _relink(_staged(df, n_files, key), dest, name)
+    except FileNotFoundError:
+        out = []
+    if not out:  # Spark writes at least one file, even for no rows
+        _STAGED.pop(key, None)
+        out = _relink(_staged(df, n_files, key), dest, name)
+    return out
+
+
+def _purge_staged() -> None:
+    while _STAGE_ROOTS:
+        shutil.rmtree(_STAGE_ROOTS.pop(), ignore_errors=True)
+    _STAGED.clear()
+
+
+atexit.register(_purge_staged)

@@ -105,3 +105,58 @@ def test_shipped_package_zip_is_removed_at_exit(outside_run):
     got, tmp = outside_run
     assert got["udf"] == ["chess_ratings_spark", "chess_ratings_spark"]
     assert not list(tmp.glob("crs_pkg_*"))
+
+
+_STAGING_DRIVER = textwrap.dedent(
+    """
+    import json, os, sys
+    sys.path.insert(0, sys.argv[1])
+    from pyspark.sql import functions as F
+    from chess_ratings_spark import tables
+    from chess_ratings_spark.operators.tablelog import TableLog
+    from chess_ratings_spark.session import get_spark
+    from chess_ratings_spark.streaming import stream_ops
+
+    spark = get_spark("crs-staging-exit-test")
+    ev = tables.load(spark, sys.argv[2], "events")
+    work = sys.argv[3]
+    stream_ops._land_slice(
+        ev.filter("user_id % 2 = 0").select(
+            "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
+        ),
+        work + "/stream_in",
+    )
+    TableLog(work + "/table").append(ev.filter("event_id % 3 = 0"), n_files=2, tag="a")
+    print(json.dumps(sorted(os.listdir(os.environ["TMPDIR"]))))
+    spark.stop()
+    """
+)
+
+
+def test_staged_dirs_are_removed_at_exit(tmp_path):
+    """A stream slice landing and a TableLog append of a fixture slice
+    stage their rows in TMPDIR for the life of the process; a clean
+    exit leaves none of those dirs behind."""
+    dirs = {k: tmp_path / k for k in ("tmp", "local", "work")}
+    for d in dirs.values():
+        d.mkdir()
+    env = dict(os.environ)
+    env.update(
+        TMPDIR=str(dirs["tmp"]),
+        SPARK_LOCAL_DIRS=str(dirs["local"]),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _STAGING_DRIVER, str(REPO), SF_SMOKE, str(dirs["work"])],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    before_exit = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert [d for d in before_exit if not d.startswith("crs_pkg_")], (
+        "nothing was staged, so the exit check would prove nothing"
+    )
+    assert not list(dirs["tmp"].glob("crs_*"))

@@ -1228,27 +1228,22 @@ def test_ttl_state_evicts_resets_and_survives(spark, tmp_path):
 
 
 def test_land_slice_links_equal_direct_write_and_never_mutate_shared(spark, tmp_path):
-    """Round-15 staging optimization: _land_slice hardlinks a slice's
-    session-cached staged files into a run-private dir. The landed
-    content must equal a direct write, a second slice must append
-    without clobbering the first, and mutating the private dir must
-    never change the shared staged copy."""
+    """_land_slice hardlinks a fixture slice's staged files into a
+    run-private dir. The landed content must equal a direct write, a
+    second slice must append without clobbering the first, and mutating
+    the private dir must never change the shared staged copy."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from chess_ratings_spark.streaming import stream_ops
-
-    df_a = spark.range(0, 100).select(
+    spark.range(0, 150).select(
         F.col("id").alias("event_id"), (F.col("id") % 7).alias("vc")
-    )
-    df_b = spark.range(100, 150).select(
-        F.col("id").alias("event_id"), (F.col("id") % 7).alias("vc")
-    )
+    ).write.parquet(str(tmp_path / "sf" / "slices.parquet"))
+    fx = tables.load(spark, str(tmp_path / "sf"), "slices")
+    df_a = fx.filter(F.col("event_id") < 100)
+    df_b = fx.filter(F.col("event_id") >= 100)
 
     dest = str(tmp_path / "in")
     stream_ops._land_slice(df_a, dest)
-    shared_a = stream_ops._slice_stage(df_a)
+    shared_a = tables.staged_dir(df_a)
     listing_before = sorted(os.listdir(shared_a))
 
     got_a = spark.read.parquet(dest)
@@ -1272,4 +1267,33 @@ def test_land_slice_links_equal_direct_write_and_never_mutate_shared(spark, tmp_
     assert spark.read.parquet(shared_a).count() == 100
 
     # cache hit: the same slice resolves to the same staged dir
-    assert stream_ops._slice_stage(df_a) == shared_a
+    assert tables.staged_dir(df_a) == shared_a
+
+
+def test_aliased_slice_is_staged_once(spark, tmp_path, monkeypatch):
+    """The stream harnesses rebuild their slices on every run, and an
+    ``.alias`` mints fresh expression IDs each time: landing the same
+    aliased fixture slice twice still shares one staged dir."""
+    import os
+    import tempfile
+
+    ev = tables.load(spark, SF_SMOKE, "events")
+
+    def slice_a():
+        return ev.filter("user_id % 2 = 0").select(
+            "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("vc")
+        )
+
+    private_tmp = tmp_path / "tmp"
+    private_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(private_tmp))
+    stream_ops._land_slice(slice_a(), str(tmp_path / "run1"))
+    stream_ops._land_slice(slice_a(), str(tmp_path / "run2"))
+    monkeypatch.undo()
+
+    inodes = [
+        sorted(os.stat(p).st_ino for p in (tmp_path / run).glob("*.parquet"))
+        for run in ("run1", "run2")
+    ]
+    assert inodes[0] and inodes[0] == inodes[1]
+    assert len(list(private_tmp.iterdir())) <= 1

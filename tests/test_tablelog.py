@@ -2365,20 +2365,25 @@ def test_object_store_full_verb_lifecycle(base, spark):
     )
 
 
+def _fixture(spark, base: str, df):
+    """``df`` written as a fixture table and read back through
+    ``tables.load``, the only reader whose files are staged."""
+    from chess_ratings_spark import tables
+
+    df.write.parquet(base + "/sf/fixture.parquet")
+    return tables.load(spark, base + "/sf", "fixture")
+
+
 def test_land_stage_links_fixture_slices(base, spark):
-    """Deterministic fixture slices are staged once per session and
-    re-landed by hardlink: identical slices share inodes across tables,
-    different slices never alias, linked content equals a fresh write,
-    and unlinking one table's copy (vacuum) leaves the other intact."""
+    """Fixture slices are staged once per process and re-landed by
+    hardlink: identical slices share inodes across tables, different
+    slices never alias, linked content equals a fresh write, and
+    unlinking one table's copy (vacuum) leaves the other intact."""
     import os
 
-    from chess_ratings_spark.operators import tablelog as tl
-
-    src_dir = base + "/fixture"
-    spark.range(60).selectExpr(
+    fx = _fixture(spark, base, spark.range(60).selectExpr(
         "id AS k", "id % 3 AS m", "id * 7 AS v"
-    ).write.mode("overwrite").parquet(src_dir)
-    fx = spark.read.parquet(src_dir)
+    ))
 
     a = TableLog(base + "/a")
     b = TableLog(base + "/b")
@@ -2391,8 +2396,7 @@ def test_land_stage_links_fixture_slices(base, spark):
     ia = {os.stat(p).st_ino for p in fa}
     ib0 = {os.stat(p).st_ino for p in fb if "s0" in p.name}
     ib1 = {os.stat(p).st_ino for p in fb if "s1" in p.name}
-    if tl._USE_LAND_STAGING:
-        assert ia == ib0, "identical slices should share staged inodes"
+    assert ia == ib0, "identical slices should share staged inodes"
     assert not (ib0 & ib1), "different slices must never alias"
 
     # linked content == direct content (slice definition replayed)
@@ -2414,18 +2418,13 @@ def test_land_relink_of_vanished_stage_writes_fresh(base, spark, monkeypatch):
     files, and the stale stage key is evicted."""
     import pathlib
 
-    from chess_ratings_spark.operators import tablelog as tl
+    from chess_ratings_spark import tables
 
-    if not tl._USE_LAND_STAGING:
-        pytest.skip("land staging disabled")
-    src_dir = base + "/fixture"
-    spark.range(60).selectExpr("id AS k", "id % 3 AS m").write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    sl = spark.read.parquet(src_dir).filter(F.col("m") == 2)
+    fx = _fixture(spark, base, spark.range(60).selectExpr("id AS k", "id % 3 AS m"))
+    sl = fx.filter(F.col("m") == 2)
     TableLog(base + "/a").append(sl, n_files=2, tag="s2")
-    key = tl._land_stage_key(sl, 2)
-    staged = tl._LAND_STAGE_CACHE[key]
+    key = tables._stage_key(sl, 2)
+    staged = tables._STAGED[key]
 
     is_dir = pathlib.Path.is_dir
 
@@ -2443,4 +2442,33 @@ def test_land_relink_of_vanished_stage_writes_fresh(base, spark, monkeypatch):
     monkeypatch.undo()
 
     assert b.snapshot(spark).count() == 20
-    assert tl._LAND_STAGE_CACHE.get(key) != staged
+    assert tables._STAGED.get(key) != staged
+
+
+def test_land_of_run_private_files_keeps_no_stage(base, spark, monkeypatch):
+    """Frames over a run's own table files (a snapshot re-landed
+    elsewhere, an OPTIMIZE rewrite) can never be landed again once the
+    run deletes its table, so they are written fresh and their scratch
+    removed at once: nothing is left in the temp dir and no staged
+    entry is kept."""
+    from chess_ratings_spark import tables
+
+    fx = _fixture(spark, base, spark.range(60).selectExpr("id AS k", "id % 3 AS m"))
+    log = TableLog(base + "/t")
+    for m in range(3):
+        log.append(fx.filter(F.col("m") == m), n_files=2, tag=f"s{m}")
+    n_staged = len(tables._STAGED)
+
+    private_tmp = Path(base) / "tmp"
+    private_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(private_tmp))
+    copy = TableLog(base + "/copy")
+    copy.append(log.snapshot(spark), n_files=2, tag="c")
+    log.optimize(spark, target_rows_per_file=1000)
+    monkeypatch.undo()
+
+    assert copy.snapshot(spark).count() == 60
+    assert log.snapshot(spark).count() == 60
+    assert len(log.read_manifest()["files"]) == 1
+    assert not list(private_tmp.iterdir()), "a run-private landing left a dir"
+    assert len(tables._STAGED) == n_staged
